@@ -4,30 +4,28 @@ The reference runs ONE sequential stream with a sliding conformal
 calibrator, a fixed-threshold ablation, and an ADWIN drift detector
 that resets the calibrator (/root/reference/src/stream.py:335-374,
 src/calibration.py:13-53). Spark has no built-in operator for
-"rolling exact quantile with reset-on-drift", so this is an
-`applyInPandas` grouped-map kernel: state is sharded by `conv_id`
+"rolling exact quantile with reset-on-drift", so this is a mapInArrow
+kernel over group-sorted partitions: state is sharded by `conv_id`
 (the north-rule contract) or kept global (scope="global", test/parity
 mode — a single group degenerates to the reference's semantics
 exactly), rows ordered by `turn_idx` inside each group.
 
-Semantics preserved bit-for-bit (see oracle.py for the per-event
-statement):
-- C1/C2 conformal: the row's own score enters the window BEFORE the
-  threshold read; threshold k = max(1, int(round_half_even((1-a)*n)))
-  over the sorted window (src/calibration.py:46-53) — NOT Spark's
-  interpolating percentile.
-- C5 warmup: is_anom = (1-based event count within scope >= warmup)
-  AND score > thr (strict >) (src/stream.py:363).
-- C6 no-calib: threshold frozen ONCE from the first `warmup` scores
-  with the *different* index formula int((1-a)*(n-1))
-  (src/stream.py:351-359).
-- C7/C3 drift: detector update AFTER the anomaly decision; on drift
-  the conformal buffer clears starting with the NEXT row
-  (src/stream.py:365-368).
+The per-group state machine is the single `Calibrator`
+(log_project_spark/calibrator.py), shared with the streaming and
+transformer kernels; it holds the conformal window in arrival order
+(`arrivals`), the 1-based event count (`seen`), the drift detector
+(`det`), and the no-calib `frozen` threshold with its `warm` scores.
+Its docstring states the C1/C2 (update-before-threshold, half-even
+k), C5 (1-based warmup, strict >), C6 (frozen int((1-a)*(n-1)) index)
+and C7/C3 (drift after the decision, reset from the next row)
+contract; oracle.py restates it per event for the tests. Rows reach
+the kernel sorted once by (group keys, order columns) — the shuffle's
+sortWithinPartitions, or the caller's clustered layout — and each
+group is fed in that order to `Calibrator.run`.
 
 Scale notes: groups are conversations — bounded by turns-per-conv,
 not by table size, so a 10^12-row table shards into ~10^8 modest
-groups. The kernel is O(n * window) worst case per group via a
+groups. The calibrator is O(n * window) worst case per group via a
 bisect-maintained sorted buffer (C-speed memmove); the Arrow exchange
 is columnar. Hot conv_ids do not break this operator (state is
 inherently sequential per conversation); skew salting applies to the
@@ -36,88 +34,17 @@ downstream per-sink aggregates (operators/aggregate.py).
 
 from __future__ import annotations
 
-import bisect
 from typing import Iterable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..adwin import make_detector
+from ..calibrator import Calibrator
 from ..config import PipelineConfig
 
 GLOBAL_KEY = "__scope__"
-
-
-def _fixed_threshold(warm: np.ndarray, alpha: float) -> float:
-    """C6 freeze formula: k = int((1-alpha)*(n-1)) (stream.py:354-357)."""
-    ordered = np.sort(warm)
-    k = int((1.0 - alpha) * (len(ordered) - 1))
-    return float(ordered[min(max(k, 0), len(ordered) - 1)])
-
-
-def _run_group(
-    scores: np.ndarray,
-    alpha: float,
-    window: int,
-    warmup: int,
-    no_calib: bool,
-    drift_kind: str,
-    adwin_delta: float,
-    sleep_ms: float = 0.0,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Sequential per-group kernel; returns (thr, is_anom, is_drift).
-
-    sleep_ms > 0 paces each event like the reference's --sleep_ms
-    simulation knob (src/stream.py:268-270,373-374); off by default
-    and never used in throughput paths."""
-    import time as _time
-
-    n = len(scores)
-    thr = np.full(n, np.inf)
-    anom = np.zeros(n, dtype=bool)
-    drift = np.zeros(n, dtype=bool)
-    detector = make_detector(drift_kind, adwin_delta) if drift_kind != "none" else None
-
-    if no_calib:
-        # Two-phase: freeze once warm count reaches `warmup` (1-based).
-        freeze_at = max(warmup, 1) - 1  # row index at which thr freezes
-        if n > freeze_at:
-            frozen = _fixed_threshold(scores[: freeze_at + 1], alpha)
-            thr[freeze_at:] = frozen
-            anom[freeze_at:] = scores[freeze_at:] > frozen
-        if detector is not None:
-            for i in range(n):
-                if detector.update(float(scores[i])):
-                    drift[i] = True
-        if sleep_ms > 0:
-            for _ in range(n):
-                _time.sleep(sleep_ms / 1000.0)
-        return thr, anom, drift
-
-    buf: list[float] = []  # sorted conformal window since last reset
-    seg_start = 0  # first row index of the current calibration segment
-    for i in range(n):
-        s = float(scores[i])
-        bisect.insort(buf, s)
-        if len(buf) > window:
-            # evict the arrival-order-oldest value in the segment
-            oldest = float(scores[i - window])
-            del buf[bisect.bisect_left(buf, oldest)]
-        m = len(buf)
-        k = max(1, int(round((1.0 - alpha) * m)))  # half-even, like Python round
-        t = buf[k - 1]
-        thr[i] = t
-        anom[i] = (i + 1 >= warmup) and s > t
-        if detector is not None and detector.update(s):
-            drift[i] = True
-            buf.clear()
-            seg_start = i + 1  # noqa: F841  (documents segment semantics)
-        if sleep_ms > 0:
-            _time.sleep(sleep_ms / 1000.0)
-    return thr, anom, drift
 
 
 def _extended_schema(df: DataFrame) -> T.StructType:
@@ -146,7 +73,6 @@ def calibrate(
     batch_score_input: str | None = None,
     drop_score_input: bool = True,
     layout: str = "shuffle",
-    engine: str = "arrow",
     needed_cols: Iterable[str] | None = None,
 ) -> DataFrame:
     """Attach (score, thr, is_anom, is_drift) to every row via the
@@ -186,13 +112,13 @@ def calibrate(
     the layout guarantee; keep input files under
     spark.sql.files.maxPartitionBytes so splits never bisect a file.
 
-    engine="arrow" (default) streams pyarrow RecordBatches
-    (mapInArrow): passthrough columns — including every string column —
-    are zero-copy slices that never materialize as Python objects; the
-    kernel touches only the score float array and the group-key change
-    mask, and fused scoring dedupes via Arrow dictionary_encode (C++).
-    engine="pandas" keeps the mapInPandas implementation (used by the
-    parity tests as a second witness).
+    The kernel streams pyarrow RecordBatches (mapInArrow): passthrough
+    columns — including every string column — are zero-copy slices
+    that never materialize as Python objects; the kernel touches only
+    the score float array and the group-key change mask, and fused
+    scoring dedupes via Arrow dictionary_encode (C++). Each group runs
+    through one `Calibrator`, which carries over when a group spans
+    Arrow batches, so no rows are held back.
 
     Physical plan (layout="shuffle", default): repartition(group_keys)
     + sortWithinPartitions + a streaming map. Deliberately NOT
@@ -204,10 +130,6 @@ def calibrate(
     — one shuffle either way, same semantics (verified against the
     per-event oracle in tests)."""
     order_cols = list(order_cols)
-    no_calib = cfg.calibration == "no_calib"
-    alpha, window, warmup = cfg.alpha, cfg.window, cfg.warmup
-    drift_kind, delta = cfg.drift_detector, cfg.adwin_delta
-    sleep_ms = getattr(cfg, "sleep_ms", 0.0)
     scope_keys = list(group_keys) if group_keys is not None else cfg.scope_keys()
 
     if needed_cols is not None:
@@ -258,112 +180,14 @@ def calibrate(
             *group_keys, *order_cols
         )
 
-    def run_groups(pdf: pd.DataFrame) -> pd.DataFrame:
-        """All rows of >=1 complete groups, already sorted."""
-        scores = pdf["score"].to_numpy(dtype=np.float64)
-        # group boundary mask over the (sorted) key columns
-        if len(group_keys) == 1:
-            keys = pdf[group_keys[0]].to_numpy()
-            change = np.empty(len(keys), dtype=bool)
-            change[0] = True
-            change[1:] = keys[1:] != keys[:-1]
-        else:
-            change = np.zeros(len(pdf), dtype=bool)
-            change[0] = True
-            for k in group_keys:
-                keys = pdf[k].to_numpy()
-                change[1:] |= keys[1:] != keys[:-1]
-        starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], len(pdf))
-        thr = np.empty(len(pdf))
-        anom = np.empty(len(pdf), dtype=bool)
-        drift = np.empty(len(pdf), dtype=bool)
-        for s, e in zip(starts, ends):
-            t, a, d = _run_group(
-                scores[s:e], alpha, window, warmup, no_calib, drift_kind, delta, sleep_ms
-            )
-            thr[s:e], anom[s:e], drift[s:e] = t, a, d
-        return pdf.assign(thr=thr, is_anom=anom, is_drift=drift)[out_cols]
-
-    def stream(batches):
-        carry: pd.DataFrame | None = None
-        for batch in batches:
-            if input_col is not None and len(batch):
-                # fused scoring: per-batch dedupe then vectorized model
-                texts = batch[input_col].fillna("").astype(str)
-                uniq, inverse = np.unique(texts.to_numpy(), return_inverse=True)
-                batch = batch.assign(score=batch_score_fn(list(uniq))[inverse])
-            if carry is not None and len(carry):
-                batch = pd.concat([carry, batch], ignore_index=True)
-                carry = None
-            if not len(batch):
-                continue
-            # hold back the (possibly incomplete) final group
-            last_key = tuple(batch[k].iloc[-1] for k in group_keys)
-            mask = np.ones(len(batch), dtype=bool)
-            for k, v in zip(group_keys, last_key):
-                mask &= (batch[k] == v).to_numpy()
-            if mask.all():
-                carry = batch
-                continue
-            # rows of the final group are a contiguous tail (sorted input)
-            tail_start = int(np.flatnonzero(~mask).max() + 1)
-            carry = batch.iloc[tail_start:].reset_index(drop=True)
-            head = batch.iloc[:tail_start]
-            if len(head):
-                yield run_groups(head)
-        if carry is not None and len(carry):
-            yield run_groups(carry)
-
     def stream_arrow(batches):
         import pyarrow as pa
         import pyarrow.compute as pc
 
-        def concat(b1, scores1, b2, scores2):
-            # combine_chunks merges each column to one chunk -> one batch
-            merged = pa.Table.from_batches([b1, b2]).combine_chunks().to_batches()
-            assert len(merged) == 1
-            return merged[0], np.concatenate([scores1, scores2])
-
-        def change_mask(batch) -> np.ndarray:
-            n = batch.num_rows
-            change = np.zeros(n, dtype=bool)
-            change[0] = True
-            for k in group_keys:
-                arr = batch.column(batch.schema.get_field_index(k))
-                neq = pc.not_equal(arr.slice(1), arr.slice(0, n - 1))
-                change[1:] |= neq.to_numpy(zero_copy_only=False)
-            return change
-
-        def emit(head, head_scores, change) -> "pa.RecordBatch":
-            starts = np.flatnonzero(change)
-            ends = np.append(starts[1:], head.num_rows)
-            thr = np.empty(head.num_rows)
-            anom = np.empty(head.num_rows, dtype=bool)
-            drift = np.empty(head.num_rows, dtype=bool)
-            for s, e in zip(starts, ends):
-                t, a, d = _run_group(
-                    head_scores[s:e], alpha, window, warmup, no_calib, drift_kind, delta,
-                    sleep_ms,
-                )
-                thr[s:e], anom[s:e], drift[s:e] = t, a, d
-            arrays = []
-            for f in out_schema.fields:
-                if f.name == "score":
-                    arrays.append(pa.array(head_scores, type=pa.float64()))
-                elif f.name == "thr":
-                    arrays.append(pa.array(thr, type=pa.float64()))
-                elif f.name == "is_anom":
-                    arrays.append(pa.array(anom, type=pa.bool_()))
-                elif f.name == "is_drift":
-                    arrays.append(pa.array(drift, type=pa.bool_()))
-                else:
-                    arrays.append(head.column(head.schema.get_field_index(f.name)))
-            return pa.RecordBatch.from_arrays(arrays, names=out_cols)
-
-        carry = None  # (RecordBatch, np scores)
+        last_key, cal = None, None  # the group the previous batch ended in
         for batch in batches:
-            if batch.num_rows == 0:
+            n = batch.num_rows
+            if n == 0:
                 continue
             if input_col is not None:
                 enc = pc.dictionary_encode(
@@ -376,23 +200,37 @@ def calibrate(
                 scores = batch.column(
                     batch.schema.get_field_index("score")
                 ).to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
-            if carry is not None:
-                batch, scores = concat(carry[0], carry[1], batch, scores)
-            change = change_mask(batch)
-            starts = np.flatnonzero(change)
-            if len(starts) == 1:
-                carry = (batch, scores)  # single (possibly continuing) group
-                continue
-            tail = int(starts[-1])
-            carry = (batch.slice(tail), scores[tail:])
-            yield emit(batch.slice(0, tail), scores[:tail], change[:tail])
-        if carry is not None and carry[0].num_rows:
-            yield emit(carry[0], carry[1], change_mask(carry[0]))
+            keys = [batch.column(batch.schema.get_field_index(k)) for k in group_keys]
+            change = np.zeros(n, dtype=bool)
+            for arr in keys:
+                neq = pc.not_equal(arr.slice(1), arr.slice(0, n - 1))
+                change[1:] |= neq.to_numpy(zero_copy_only=False)
+            # a group that spans batches keeps its Calibrator
+            change[0] = tuple(a[0].as_py() for a in keys) != last_key
+            last_key = tuple(a[n - 1].as_py() for a in keys)
+            bounds = [0, *(np.flatnonzero(change[1:]) + 1).tolist(), n]
+            thr = np.empty(n)
+            anom = np.empty(n, dtype=bool)
+            drift = np.empty(n, dtype=bool)
+            for s, e in zip(bounds[:-1], bounds[1:]):
+                if change[s]:
+                    cal = Calibrator(cfg)
+                thr[s:e], anom[s:e], drift[s:e] = cal.run(scores[s:e])
+            arrays = []
+            for f in out_schema.fields:
+                if f.name == "score":
+                    arrays.append(pa.array(scores, type=pa.float64()))
+                elif f.name == "thr":
+                    arrays.append(pa.array(thr, type=pa.float64()))
+                elif f.name == "is_anom":
+                    arrays.append(pa.array(anom, type=pa.bool_()))
+                elif f.name == "is_drift":
+                    arrays.append(pa.array(drift, type=pa.bool_()))
+                else:
+                    arrays.append(batch.column(batch.schema.get_field_index(f.name)))
+            yield pa.RecordBatch.from_arrays(arrays, names=out_cols)
 
-    if engine == "arrow":
-        result = arranged.mapInArrow(stream_arrow, schema=out_schema)
-    else:
-        result = arranged.mapInPandas(stream, schema=out_schema)
+    result = arranged.mapInArrow(stream_arrow, schema=out_schema)
     if GLOBAL_KEY in result.columns:
         result = result.drop(GLOBAL_KEY)
     return result

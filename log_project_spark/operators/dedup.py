@@ -45,14 +45,6 @@ logger = logging.getLogger(__name__)
 SIMHASH_BITS = 60
 
 
-def word_tokens(text: Column) -> Column:
-    """Lowercased whitespace tokens — collapse-then-single-char-split,
-    no higher-order filter() lambda (see operators/parse.py)."""
-    from .parse import word_tokens_col
-
-    return word_tokens_col(text)
-
-
 def exact_dup_groups(df: DataFrame, key_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Groups of byte-identical values: key, n, min_id (the keeper).
 

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..calibrator import Calibrator
 from ..config import PipelineConfig
 from ..iforest import TextAnomalyModel, fit_text_anomaly_model
 
@@ -255,36 +256,26 @@ def with_hash_embed_score(
 
 def _transformer_stream_group(
     token_rows: list[list[str]],
-    alpha: float,
-    cal_window: int,
-    warmup: int,
-    drift_kind: str,
-    adwin_delta: float,
+    cal: Calibrator,
     seed: int,
     dim: int,
     embed_window: int,
     decay: float,
 ):
-    """Per-group sequential loop: hash-embedding context score feeding
-    the conformal threshold and drift detector, with BOTH calibration
-    buffer and context reset on drift — the C10 hook the reference
+    """Per-group sequential loop: hash-embedding context score fed to
+    the group's `Calibrator` one event at a time, with the context
+    ALSO reset when it reports drift — the C10 hook the reference
     documents (src/transformer.py:61-63) but never wires. Returns
     (score, thr, is_anom, is_drift) arrays."""
-    import bisect
     from collections import deque
-
-    from ..adwin import make_detector
 
     n = len(token_rows)
     score = np.zeros(n)
-    thr = np.full(n, np.inf)
+    thr = np.empty(n)
     anom = np.zeros(n, dtype=bool)
     drift = np.zeros(n, dtype=bool)
-    detector = make_detector(drift_kind, adwin_delta) if drift_kind != "none" else None
     cache: dict[str, np.ndarray] = {}
     ctx_buf: deque[np.ndarray] = deque(maxlen=embed_window)
-    cal_sorted: list[float] = []
-    cal_arrivals: deque[float] = deque()
     for i, toks in enumerate(token_rows):
         toks = list(toks or [])
         # ---- score from prior context (transformer.py:78-101) ----
@@ -302,21 +293,9 @@ def _transformer_stream_group(
             score[i] = min(1.0, max(0.0, val if math.isfinite(val) else 0.0))
         for t in toks:
             ctx_buf.append(_token_embedding(t, seed, dim, cache))
-        s = float(score[i])
-        # ---- conformal (calibration.py:28-53, stream.py:361-363) ----
-        bisect.insort(cal_sorted, s)
-        cal_arrivals.append(s)
-        if len(cal_arrivals) > cal_window:
-            oldest = cal_arrivals.popleft()
-            del cal_sorted[bisect.bisect_left(cal_sorted, oldest)]
-        k = max(1, int(round((1.0 - alpha) * len(cal_sorted))))
-        thr[i] = cal_sorted[k - 1]
-        anom[i] = (i + 1 >= warmup) and s > thr[i]
-        # ---- drift + resets (stream.py:365-368 + C10) ----
-        if detector is not None and detector.update(s):
-            drift[i] = True
-            cal_sorted.clear()
-            cal_arrivals.clear()
+        # ---- calibrate + drift (stream.py:361-368), C10 context reset ----
+        thr[i], anom[i], drift[i] = cal.step(score[i])
+        if drift[i]:
             ctx_buf.clear()
     return score, thr, anom, drift
 
@@ -329,8 +308,6 @@ def with_transformer_calibrate(
 ) -> DataFrame:
     """Transformer mode, fully integrated: one grouped pass per
     conv_id doing scoring + calibration + drift with context reset."""
-    alpha, cal_window, warmup = cfg.alpha, cfg.window, cfg.warmup
-    drift_kind, delta = cfg.drift_detector, cfg.adwin_delta
     seed, dim = cfg.seed, cfg.embed_dim
     embed_window, decay = cfg.embed_window, cfg.embed_decay
     order = list(order_cols)
@@ -357,8 +334,7 @@ def with_transformer_calibrate(
         pdf = pdf.sort_values(order, kind="mergesort")
         rows = [list(x) if x is not None else [] for x in pdf[tokens_col]]
         score, thr, anom, drift = _transformer_stream_group(
-            rows, alpha, cal_window, warmup, drift_kind, delta,
-            seed, dim, embed_window, decay,
+            rows, Calibrator(cfg), seed, dim, embed_window, decay
         )
         pdf = pdf.assign(score=score, thr=thr, is_anom=anom, is_drift=drift)
         return pdf[out_cols]

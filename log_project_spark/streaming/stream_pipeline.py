@@ -7,22 +7,29 @@ true streaming path for incremental arrival: parquet/file source ->
 same Catalyst parse stage -> per-conv_id conformal + drift state via
 applyInPandasWithState -> foreachBatch fan-out sinks.
 
-State per conv_id (schema'd, checkpointable by Spark):
-- buf:   array<double>  conformal window since last reset (C1)
-- seen:  long           1-based event count in scope (C5 warmup)
-- det:   binary         pickled Adwin detector (C7), empty = none
+The state machine is the same single `Calibrator`
+(log_project_spark/calibrator.py) the batch kernel runs, persisted per
+conv_id as one STATE_SCHEMA row (`Calibrator.state()`):
+- arrivals: array<double>  conformal window in arrival order since the
+                           last reset (C1; the sorted view is rebuilt)
+- seen:     long           1-based event count in scope (C5 warmup)
+- det:      binary         pickled drift detector (C7), empty = none
+- frozen:   double         no-calib threshold once frozen (C6), else null
+- warm:     array<double>  no-calib scores seen before the freeze
 
-Within each micro-batch, rows of a group are processed in turn_idx
-order; ACROSS micro-batches, correctness requires the source to
-deliver turns in non-decreasing turn_idx per conv_id (true for
-append-only transcript logs). No watermark: the contract is stable
+Sort once: applyInPandasWithState hands a group's micro-batch rows
+over in chunks of spark.sql.execution.arrow.maxRecordsPerBatch, in no
+guaranteed order, so the kernel concatenates every chunk of the group
+and sorts the whole micro-batch by turn_idx once before running it.
+ACROSS micro-batches, correctness requires the source to deliver turns
+in non-decreasing turn_idx per conv_id (true for append-only
+transcript logs). No watermark: the contract is stable
 (conv_id, turn_idx) ordering, not event-time windowing.
 """
 
 from __future__ import annotations
 
-import pickle
-from typing import Any, Iterable, Iterator
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -31,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..adwin import Adwin
+from ..calibrator import Calibrator
 from ..config import PipelineConfig
 
 OUTPUT_SCHEMA = T.StructType(
@@ -47,74 +54,40 @@ OUTPUT_SCHEMA = T.StructType(
 
 STATE_SCHEMA = T.StructType(
     [
-        # conformal window in ARRIVAL order since last reset (the
-        # eviction order; the sorted view is rebuilt per micro-batch)
         T.StructField("arrivals", T.ArrayType(T.DoubleType())),
         T.StructField("seen", T.LongType()),
         T.StructField("det", T.BinaryType()),
+        T.StructField("frozen", T.DoubleType()),
+        T.StructField("warm", T.ArrayType(T.DoubleType())),
     ]
 )
 
 
 def make_stateful_kernel(cfg: PipelineConfig):
-    """Returns the applyInPandasWithState function implementing
-    C1/C2/C5/C7/C3 with persistent per-group state."""
-    alpha, window, warmup = cfg.alpha, cfg.window, cfg.warmup
-    use_drift = cfg.drift_detector == "adwin"
-    delta = cfg.adwin_delta
+    """Returns the applyInPandasWithState function: the group's rows of
+    this micro-batch, sorted once by turn_idx, through the group's
+    persisted `Calibrator`."""
 
     def kernel(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        import bisect
-        from collections import deque
-
-        if state.exists:
-            arrivals_list, seen, det_blob = state.get
-            arrivals: deque[float] = deque(arrivals_list)
-            detector = pickle.loads(bytes(det_blob)) if det_blob else None
-        else:
-            arrivals, seen = deque(), 0
-            detector = Adwin(delta=delta) if use_drift else None
-        buf = sorted(arrivals)  # sorted view, kept in sync below
-
-        for pdf in pdfs:
-            pdf = pdf.sort_values("turn_idx", kind="mergesort")
-            scores = pdf["score"].to_numpy(dtype=np.float64)
-            n = len(scores)
-            thr = np.empty(n)
-            anom = np.zeros(n, dtype=bool)
-            drift = np.zeros(n, dtype=bool)
-            for i in range(n):
-                s = float(scores[i])
-                seen += 1
-                bisect.insort(buf, s)
-                arrivals.append(s)
-                if len(arrivals) > window:
-                    oldest = arrivals.popleft()
-                    del buf[bisect.bisect_left(buf, oldest)]
-                m = len(buf)
-                k = max(1, int(round((1.0 - alpha) * m)))
-                t = buf[k - 1]
-                thr[i] = t
-                anom[i] = seen >= warmup and s > t
-                if detector is not None and detector.update(s):
-                    drift[i] = True
-                    buf.clear()
-                    arrivals.clear()
-            yield pd.DataFrame(
-                {
-                    "conv_id": pdf["conv_id"].to_numpy(),
-                    "turn_idx": pdf["turn_idx"].to_numpy(),
-                    "score": scores,
-                    "thr": thr,
-                    "is_anom": anom,
-                    "is_drift": drift,
-                }
-            )
-
-        det_blob = pickle.dumps(detector) if detector is not None else b""
-        state.update((list(arrivals), seen, det_blob))
+        cal = Calibrator.from_state(cfg, state.get) if state.exists else Calibrator(cfg)
+        pdf = pd.concat(list(pdfs), ignore_index=True).sort_values(
+            "turn_idx", kind="mergesort"
+        )
+        scores = pdf["score"].to_numpy(dtype=np.float64)
+        thr, anom, drift = cal.run(scores)
+        state.update(cal.state())
+        yield pd.DataFrame(
+            {
+                "conv_id": pdf["conv_id"].to_numpy(),
+                "turn_idx": pdf["turn_idx"].to_numpy(),
+                "score": scores,
+                "thr": thr,
+                "is_anom": anom,
+                "is_drift": drift,
+            }
+        )
 
     return kernel
 

@@ -2,13 +2,14 @@
 
 The oracle (log_project_spark.oracle.run_stream) restates the
 reference event loop (/root/reference/src/stream.py:335-374) one
-event at a time; the kernel is the vectorized applyInPandas version.
+event at a time; the kernel is the mapInArrow pass driving `Calibrator`.
 A single group under scope='global' must match the oracle exactly —
 including drift-reset interplay and both quantile index formulas.
 """
 
 import math
 import random
+from dataclasses import replace
 
 import numpy as np
 import pytest
@@ -176,24 +177,39 @@ def test_clustered_layout_matches_shuffle_path(spark, tmp_path):
     assert "Exchange" not in plan
 
 
-def test_arrow_engine_matches_pandas_engine(spark):
-    """Both kernel I/O engines produce identical outputs (the pandas
-    path is the second witness for the zero-copy Arrow path)."""
+def test_arrow_kernel_matches_oracle_across_batches(spark):
+    """The Arrow kernel equals the per-event oracle (ADWIN on),
+    conversation by conversation, when a small maxRecordsPerBatch
+    makes every group span several Arrow batches (the group's
+    Calibrator carries over the batch boundary)."""
     from log_project_spark import synth
 
     t = synth.transcripts(spark, 2000, n_convs=40, anom_ratio=0.05, seed=9).withColumn(
         "score", F.length("text").cast("double")
     )
     cfg = PipelineConfig(scope="conv_id", window=80, warmup=10, drift_detector="adwin")
-    a = {
-        (r["conv_id"], r["turn_idx"]): (r["thr"], r["is_anom"], r["is_drift"])
-        for r in calibrate(t, cfg, engine="arrow").collect()
-    }
-    b = {
-        (r["conv_id"], r["turn_idx"]): (r["thr"], r["is_anom"], r["is_drift"])
-        for r in calibrate(t, cfg, engine="pandas").collect()
-    }
-    assert a == b
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        got = {
+            (r["conv_id"], r["turn_idx"]): (r["thr"], r["is_anom"], r["is_drift"])
+            for r in calibrate(t, cfg).collect()
+        }
+    finally:
+        spark.conf.set(key, prev)
+    convs: dict[str, list] = {}
+    for r in t.select("conv_id", "turn_idx", "score").orderBy("conv_id", "turn_idx").collect():
+        convs.setdefault(r["conv_id"], []).append((r["turn_idx"], r["score"]))
+    want = {}
+    for conv, rows in convs.items():
+        res = oracle.run_stream(
+            [s for _, s in rows], alpha=cfg.alpha, window=80, warmup=10,
+            detector=Adwin(delta=cfg.adwin_delta),
+        )
+        for (turn, _), thr, anom, drift in zip(rows, res.thresholds, res.is_anom, res.is_drift):
+            want[(conv, turn)] = (thr, anom, drift)
+    assert got == want
 
 
 def test_needed_cols_projection_matches_full_width(spark):
@@ -241,18 +257,19 @@ def test_needed_cols_projection_matches_full_width(spark):
 
 def test_sleep_ms_paces_kernel():
     """--sleep_ms parity knob (src/stream.py:268-270,373-374): the
-    per-group kernel sleeps per event when configured."""
+    calibrator sleeps per event when configured."""
     import time
 
     import numpy as np
 
-    from log_project_spark.operators.calibrate import _run_group
+    from log_project_spark.calibrator import Calibrator
 
     scores = np.arange(30, dtype=np.float64)
+    cfg = PipelineConfig(alpha=0.05, window=10, warmup=5, drift_detector="none")
     t0 = time.perf_counter()
-    _run_group(scores, 0.05, 10, 5, False, "none", 0.002, sleep_ms=5.0)
+    Calibrator(replace(cfg, sleep_ms=5.0)).run(scores)
     wall = time.perf_counter() - t0
     assert wall >= 30 * 0.005
     t0 = time.perf_counter()
-    _run_group(scores, 0.05, 10, 5, False, "none", 0.002)
+    Calibrator(cfg).run(scores)
     assert time.perf_counter() - t0 < 0.05

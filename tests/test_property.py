@@ -1,5 +1,5 @@
 """Property-based tests (hypothesis) over the pure kernel functions —
-the vectorized `_run_group` must equal the per-event oracle for ANY
+`Calibrator.run` must equal the per-event oracle for ANY
 score sequence and any (alpha, window, warmup) configuration, not just
 the handpicked fixtures."""
 
@@ -10,7 +10,8 @@ from hypothesis import given, settings, strategies as st
 
 from log_project_spark import oracle
 from log_project_spark.adwin import Adwin
-from log_project_spark.operators.calibrate import _run_group
+from log_project_spark.calibrator import Calibrator
+from log_project_spark.config import PipelineConfig
 
 scores_strategy = st.lists(
     st.floats(min_value=-1e6, max_value=1e6, allow_nan=False, allow_infinity=False),
@@ -27,9 +28,9 @@ scores_strategy = st.lists(
     warmup=st.integers(min_value=0, max_value=250),
 )
 def test_conformal_kernel_equals_oracle(scores, alpha, window, warmup):
-    thr, anom, drift = _run_group(
-        np.asarray(scores), alpha, window, warmup, False, "none", 0.002
-    )
+    thr, anom, drift = Calibrator(
+        PipelineConfig(alpha=alpha, window=window, warmup=warmup, drift_detector="none")
+    ).run(np.asarray(scores))
     want = oracle.run_stream(scores, alpha=alpha, window=window, warmup=warmup)
     assert list(thr) == want.thresholds
     assert list(anom) == want.is_anom
@@ -43,9 +44,12 @@ def test_conformal_kernel_equals_oracle(scores, alpha, window, warmup):
     warmup=st.integers(min_value=1, max_value=250),
 )
 def test_fixed_threshold_kernel_equals_oracle(scores, alpha, warmup):
-    thr, anom, _ = _run_group(
-        np.asarray(scores), alpha, 1000, warmup, True, "none", 0.002
-    )
+    thr, anom, _ = Calibrator(
+        PipelineConfig(
+            alpha=alpha, window=1000, warmup=warmup, calibration="no_calib",
+            drift_detector="none",
+        )
+    ).run(np.asarray(scores))
     want = oracle.run_stream(scores, alpha=alpha, warmup=warmup, no_calib=True)
     for a, b in zip(thr, want.thresholds):
         assert (math.isinf(a) and math.isinf(b)) or a == b
@@ -65,9 +69,9 @@ def test_adwin_kernel_equals_oracle_sequence(scores, delta):
     """The kernel's embedded detector sees the same score sequence as a
     standalone ADWIN (drift bits equal), and resets keep thresholds
     equal to the oracle's."""
-    thr, anom, drift = _run_group(
-        np.asarray(scores), 0.05, 50, 10, False, "adwin", delta
-    )
+    thr, anom, drift = Calibrator(
+        PipelineConfig(alpha=0.05, window=50, warmup=10, drift_detector="adwin", adwin_delta=delta)
+    ).run(np.asarray(scores))
     want = oracle.run_stream(
         scores, alpha=0.05, window=50, warmup=10, detector=Adwin(delta=delta)
     )

@@ -162,6 +162,24 @@ def test_integrated_transformer_calibrate_matches_oracle(spark):
         assert r["is_anom"] == want.is_anom[i], i
         assert r["thr"] == pytest.approx(want.thresholds[i], abs=1e-6), i
 
+    # no_calib: calibration never feeds back into the scores, so the
+    # oracle is the same score stream through the fixed-threshold loop
+    from dataclasses import replace
+
+    want_nc = oracle.run_stream(
+        scores_o, alpha=0.05, window=100, warmup=10, no_calib=True,
+        detector=Adwin(delta=0.002),
+    )
+    got_nc = (
+        scoring.with_transformer_calibrate(df, replace(cfg, calibration="no_calib"))
+        .orderBy("turn_idx")
+        .collect()
+    )
+    for i, r in enumerate(got_nc):
+        assert r["is_drift"] == want_nc.is_drift[i], i
+        assert r["is_anom"] == want_nc.is_anom[i], i
+        assert r["thr"] == pytest.approx(want_nc.thresholds[i], abs=1e-6), i
+
 
 def test_tfidf_counts_factorize_matches_unique_path():
     """r6 optimization: _counts dedupes tokens with pd.factorize
@@ -210,6 +228,7 @@ def test_fit_df_exact_across_formulations():
     X[nz] = rng.integers(1, 9, size=int(nz.sum())).astype(np.float32)
     X[17] = 0.0  # empty doc
     w = rng.integers(0, 50_000, size=n).astype(np.float64)
+    assert w.sum() < float(1 << 24)  # else the float64 fallback runs instead
 
     got = HashedTfidf(b, 7)._fit_from_counts(X.copy(), n, w).idf_
 

@@ -36,9 +36,17 @@ def fixture_dir(spark, tmp_path_factory):
     return root, base
 
 
-def test_streaming_matches_batch_kernel(spark, fixture_dir, tmp_path):
+@pytest.mark.parametrize("drift_detector", ["adwin", "none"])
+@pytest.mark.parametrize("calibration", ["conformal", "no_calib"])
+def test_streaming_matches_batch_kernel(
+    spark, fixture_dir, tmp_path, calibration, drift_detector
+):
     root, base = fixture_dir
-    cfg = PipelineConfig(window=50, warmup=10, scope="conv_id", drift_detector="adwin")
+    cfg = PipelineConfig(
+        window=50, warmup=10, scope="conv_id", calibration=calibration,
+        drift_detector=drift_detector,
+    )
+    name = f"stream_out_{calibration}_{drift_detector}"
 
     # batch reference result
     batch = {
@@ -73,7 +81,7 @@ def test_streaming_matches_batch_kernel(spark, fixture_dir, tmp_path):
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
-        .queryName("stream_out")
+        .queryName(name)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .start()
     )
@@ -83,13 +91,63 @@ def test_streaming_matches_batch_kernel(spark, fixture_dir, tmp_path):
         q.stop()
     got = {
         (r["conv_id"], r["turn_idx"]): (r["thr"], r["is_anom"], r["is_drift"])
-        for r in spark.sql("SELECT * FROM stream_out").collect()
+        for r in spark.sql(f"SELECT * FROM {name}").collect()
     }
     assert len(got) == len(batch)
     mismatches = [
         (k, got[k], batch[k]) for k in batch if got[k] != batch[k]
     ]
     assert not mismatches, mismatches[:5]
+
+
+def test_streaming_sorts_whole_group_across_arrow_chunks(spark, tmp_path):
+    """One micro-batch holds 300 turns of one conversation, written in
+    reverse turn order, and a small maxRecordsPerBatch splits the group
+    into many Arrow chunks. The kernel must still calibrate the turns
+    in turn_idx order: outputs equal the per-event oracle."""
+    import numpy as np
+
+    from log_project_spark.adwin import Adwin
+    from log_project_spark import oracle
+
+    rng = np.random.default_rng(5)
+    n = 300
+    scores = rng.normal(0.0, 1.0, n).tolist()
+    rows = [("c0", i, scores[i]) for i in reversed(range(n))]
+    src_dir = str(tmp_path / "in")
+    _feed_files(
+        spark, src_dir, [rows],
+        lambda rs: spark.createDataFrame(rs, "conv_id string, turn_idx int, score double"),
+    )
+    cfg = PipelineConfig(window=50, warmup=10, scope="conv_id", drift_detector="adwin")
+    stream = (
+        spark.readStream.schema("conv_id string, turn_idx int, score double")
+        .parquet(src_dir)
+    )
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "16")
+    try:
+        q = (
+            scored_stream(stream, cfg)
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName("chunk_order_out")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+    finally:
+        spark.conf.set(key, prev)
+    got = [
+        (r["thr"], r["is_anom"], r["is_drift"])
+        for r in spark.sql("SELECT * FROM chunk_order_out ORDER BY turn_idx").collect()
+    ]
+    want = oracle.run_stream(scores, alpha=cfg.alpha, window=50, warmup=10, detector=Adwin())
+    assert got == list(zip(want.thresholds, want.is_anom, want.is_drift))
 
 
 def test_streaming_fanout_sinks(spark, fixture_dir, tmp_path):
