@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from log_project_spark.config import PipelineConfig
 from log_project_spark.operators import aggregate as agg_ops
+from log_project_spark.operators import dedup
 from log_project_spark.operators import parse as parse_ops
 from log_project_spark.operators import route as route_ops
 from log_project_spark.operators import scoring
@@ -343,15 +344,7 @@ def q_minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     toked = _doc_word_tokens(spark, sf_dir).where(
         F.col("text").rlike(r"\S+\s+\S+\s+\S")
     )
-    sh = toked.withColumn(
-        "shingles",
-        F.expr("transform(sequence(1, size(toks)-2), i -> concat_ws(' ', slice(toks, i, 3)))"),
-    )
-    cols = [
-        F.array_min(F.expr(f"transform(shingles, s -> md5(concat(s, '|{k}')))")).alias(f"m{k}")
-        for k in range(4)
-    ]
-    return sh.select("doc_id", *cols)
+    return dedup.minhash_signature(toked, tokens_col="toks", num_hashes=4)
 
 
 def q_lsh_band_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -369,49 +362,24 @@ def q_lsh_band_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact token-set Jaccard near-dup pairs via the inverted-index
-    self-join (explode distinct tokens, equi-join, count intersection)."""
-    tok = (
-        _doc_word_tokens(spark, sf_dir)
-        .select("doc_id", F.explode(F.array_distinct("toks")).alias("tok"))
+    self-join, uncapped and on the byte-exact token key."""
+    return dedup.jaccard_pairs(
+        _doc_word_tokens(spark, sf_dir), tokens_col="toks", threshold=0.8,
+        max_item_df=None, hash_items=False,
     )
-    sizes = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    a = tok.alias("a")
-    b = tok.alias("b")
-    inter = (
-        a.join(b, (F.col("a.tok") == F.col("b.tok")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("sz").alias("sz_b"))
-    j = (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("jaccard", F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 6))
-        .where(F.col("jaccard") >= 0.8)
-    )
-    return j.select("id_a", "id_b", "jaccard")
 
 
 def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 against the vec_id=0 query vector
-    (F.zip_with/aggregate dot products, JVM-side)."""
+    (similarity.topk_cosine's Catalyst fold; zero vectors score NULL)."""
+    from log_project_spark.operators import similarity
+
     emb = _t(spark, sf_dir, "embeddings")
     qrow = emb.where(F.col("vec_id") == 0).select("embedding").first()
-    qvec = [float(x) for x in qrow["embedding"]]
-    qlit = F.array(*[F.lit(x) for x in qvec])
-    e = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    dot = F.aggregate(F.zip_with(e, qlit, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    nrm = F.sqrt(F.aggregate(F.transform(e, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
-    qn = sum(x * x for x in qvec) ** 0.5
-    cos = dot / (nrm * F.lit(qn))
-    return (
-        _spread(emb).where(F.col("vec_id") != 0)
-        .select("vec_id", cos.alias("cos_raw"))
-        .orderBy(F.col("cos_raw").desc(), F.col("vec_id"))
-        .limit(10)
-        .select("vec_id", F.round("cos_raw", 6).alias("cos"))
+    top = similarity.topk_cosine(
+        _spread(emb).where(F.col("vec_id") != 0), list(qrow["embedding"]), k=10, impl="expr"
     )
+    return top.select("vec_id", F.round("cos", 6).alias("cos"))
 
 
 _STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
@@ -856,8 +824,6 @@ def q_srp_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_simhash60(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable 60-bit SimHash (md5-prefix token hash, grouped on
     doc_id only) — bit-identical to the DuckDB restatement."""
-    from log_project_spark.operators import dedup
-
     toked = _doc_word_tokens(spark, sf_dir).withColumnRenamed("toks", "tokens")
     return dedup.simhash60(toked.select("doc_id", "tokens")).select("doc_id", "simhash")
 
@@ -866,8 +832,6 @@ def q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamming near-pairs over the portable simhash; max_hamming=3
     with 4x15-bit bands so the pigeonhole recall guarantee holds
     (ADVICE r1: 4 bands cannot cover hamming 8)."""
-    from log_project_spark.operators import dedup
-
     toked = _doc_word_tokens(spark, sf_dir).withColumnRenamed("toks", "tokens")
     sig = dedup.simhash60(toked.select("doc_id", "tokens"))
     pairs = dedup.hamming_near_pairs(sig, max_hamming=3)
@@ -875,11 +839,8 @@ def q_simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from log_project_spark.operators import dedup
-
-    toked = _doc_word_tokens(spark, sf_dir).withColumnRenamed("toks", "tokens")
-    sh = dedup.with_shingles(toked, tokens_col="tokens", n=3)
-    sig = dedup.minhash_signature(sh, num_hashes=4)
+    toked = _doc_word_tokens(spark, sf_dir)
+    sig = dedup.minhash_signature(toked, tokens_col="toks", num_hashes=4)
     return dedup.lsh_candidate_pairs(sig, num_hashes=4, band_size=2)
 
 
@@ -941,8 +902,6 @@ def q_jaccard_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token-set Jaccard with the document-frequency cap ON (VERDICT
     r1 #3): items with df > 150 leave the sets before the inverted-
     index self-join."""
-    from log_project_spark.operators import dedup
-
     toked = _doc_word_tokens(spark, sf_dir).withColumnRenamed("toks", "tokens")
     return dedup.jaccard_pairs(
         toked, threshold=0.8, max_item_df=150, log_dropped=False
@@ -967,8 +926,6 @@ def q_embedding_near_dups_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     OR-of-4x4-bit bands with shared deterministic planes, exact cosine
     verify. bucket_impl='expr' keeps the dot-product fold sequential,
     bit-identical to the DuckDB restatement."""
-    from log_project_spark.operators import dedup
-
     emb = _t(spark, sf_dir, "embeddings")
     dim = emb.select(F.size("embedding")).first()[0]
     return dedup.embedding_near_dups(
@@ -1048,8 +1005,6 @@ def q_near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     (iterative min-label propagation in Spark; transitive-closure
     recursive CTE in DuckDB): (id, component=min reachable id) for
     every doc in a near-dup cluster."""
-    from log_project_spark.operators import dedup
-
     toked = _doc_word_tokens(spark, sf_dir).withColumnRenamed("toks", "tokens")
     sig = dedup.simhash60(toked.select("doc_id", "tokens"))
     pairs = dedup.hamming_near_pairs(sig, max_hamming=3)
@@ -1107,8 +1062,6 @@ def q_salted_agg_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_keep_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-level exact dedup: the surviving (min doc_id per identical
     text) rows themselves, not just group counts."""
-    from log_project_spark.operators import dedup
-
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return dedup.dedup_exact(docs, "text", "doc_id").select("doc_id")
 
@@ -1122,7 +1075,6 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     already check."""
     from pyspark.sql import Window
 
-    from log_project_spark.operators import dedup
     from log_project_spark.operators import text_analysis as ta
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1771,8 +1723,6 @@ def _ivf_topk_sql(n_probe: int = 2, k: int = 10) -> str:
 def q_embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (exact verification path) —
     oracle-checked against the same formula in DuckDB."""
-    from log_project_spark.operators import dedup
-
     emb = _t(spark, sf_dir, "embeddings")
     return dedup.embedding_near_dups(emb, threshold=0.35, exact=True)
 

@@ -45,19 +45,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import with_shingles
+from .dedup import distinct_gram_rows
 
 
 def _gram_rows(
     df: DataFrame, id_col: str, tokens_col: str, n: int, hash_grams: bool
 ) -> DataFrame:
-    """(id, gram) inverted-index rows: distinct n-token shingles per
-    document (docs shorter than n tokens emit none — they cannot
-    contain a contaminating n-gram)."""
-    base = with_shingles(df, tokens_col=tokens_col, n=n, out_col="__sh__")
-    out = base.select(
-        F.col(id_col), F.explode(F.array_distinct("__sh__")).alias("gram")
-    )
+    """(id, gram) rows: distinct n-token grams per document (docs
+    shorter than n tokens emit none — they cannot contain a
+    contaminating n-gram)."""
+    out = distinct_gram_rows(df, id_col, tokens_col, n).withColumnRenamed("item", "gram")
     if hash_grams:
         out = out.withColumn("gram", F.xxhash64("gram"))
     return out

@@ -7,17 +7,19 @@ components:
 
 - exact dedup: xxhash64-keyed shuffle with exact key-equality
   resolution inside each hash group (no payload on any shuffle key)
-- MinHash + LSH: shingle -> K salted-md5 min-hashes -> banded buckets
-  -> candidate pairs via bucket equi-join. md5-hex lexicographic min
-  is a valid min-hash family (uniform order on shingles), identical
+- MinHash + LSH: parse.ngrams_col shingles -> K salted-md5 min-hashes
+  (a groupBy(id) min, no per-shingle lambda) -> banded buckets ->
+  candidate pairs via bucket equi-join. md5-hex lexicographic min is
+  a valid min-hash family (uniform order on shingles), identical
   across engines, and JVM-side (no Python in the plan).
 - SimHash: 60-bit signed-bit aggregation of per-token portable hashes
   (md5-hex prefix -> long, bit-identical in Spark and DuckDB so the
   signature is oracle-checkable), hamming-near pairs via banded
   prefix buckets with an explicit pigeonhole guarantee.
 - n-gram / token-set Jaccard: inverted-index self-join (explode
-  distinct shingles, equi-join on xxhash64(shingle) so the join key
-  is an 8-byte long, |A∩B| / (|A|+|B|-|A∩B|)), with a
+  distinct tokens or parse.ngrams_col shingles, equi-join on
+  xxhash64(shingle) so the join key is an 8-byte long,
+  |A∩B| / (|A|+|B|-|A∩B|)), with a
   document-frequency cap so stopword-grade hot items cannot make the
   self-join quadratic.
 - embedding-cosine near-dups: banded SRP-LSH candidates (OR of
@@ -39,6 +41,8 @@ import math
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .parse import ngram_text, ngrams_col
 
 logger = logging.getLogger(__name__)
 
@@ -101,41 +105,30 @@ def dedup_exact(df: DataFrame, key_col: str = "text", id_col: str = "doc_id") ->
     )
 
 
-def with_shingles(
-    df: DataFrame, tokens_col: str = "tokens", n: int = 3, out_col: str = "shingles"
-) -> DataFrame:
-    """n-token shingles as space-joined strings (rows with fewer than
-    n tokens get no shingles and are dropped).
-
-    The expression is TOTAL (CASE-guarded), not merely guarded by the
-    row filter: a downstream explode() pushes its `size(...) > 0`
-    predicate into the same Filter as the size >= n guard, and Spark
-    may evaluate the conjuncts in either order — on a row with fewer
-    than n tokens the unguarded `sequence(1, size-n+1)` yields a
-    DESCENDING sequence through 0 and `slice(toks, 0, n)` throws
-    INVALID_PARAMETER_VALUE.START at runtime (found r5 via
-    repetition_stats on an empty document; the same latent crash sat
-    under jaccard_pairs/minhash for any sub-n-token doc)."""
-    expr = (
-        f"CASE WHEN size({tokens_col}) >= {n} THEN "
-        f"transform(sequence(1, size({tokens_col}) - {n - 1}),"
-        f" i -> concat_ws(' ', slice({tokens_col}, i, {n}))) "
-        f"ELSE array() END"
-    )
-    return df.where(F.size(tokens_col) >= n).withColumn(out_col, F.expr(expr))
-
-
 def minhash_signature(
-    df: DataFrame, shingles_col: str = "shingles", num_hashes: int = 8
+    df: DataFrame,
+    id_col: str = "doc_id",
+    tokens_col: str = "tokens",
+    shingle_n: int = 3,
+    num_hashes: int = 8,
 ) -> DataFrame:
-    """Append m0..m{K-1} min-hash columns (salted md5 hex mins)."""
-    out = df
-    for k in range(num_hashes):
-        out = out.withColumn(
-            f"m{k}",
-            F.array_min(F.expr(f"transform({shingles_col}, s -> md5(concat(s, '|{k}')))")),
-        )
-    return out
+    """(id, m0..m{K-1}): per document, the min over its n-token
+    shingles of md5(shingle || '|k') (salted md5 hex mins). Documents
+    with fewer than shingle_n tokens get no row; ids must be unique.
+
+    Shingles are exploded and the mins are a groupBy(id) aggregate, so
+    no lambda hashes a shingle; map-side partial aggregation leaves one
+    row per document on the id-keyed exchange."""
+    grams = F.explode(ngrams_col(F.col(tokens_col), shingle_n)).alias("__g__")
+    sh = df.select(F.col(id_col), grams).select(
+        F.col(id_col), ngram_text(F.col("__g__"), shingle_n).alias("__sh__")
+    )
+    return sh.groupBy(id_col).agg(
+        *[
+            F.min(F.md5(F.concat(F.col("__sh__"), F.lit(f"|{k}")))).alias(f"m{k}")
+            for k in range(num_hashes)
+        ]
+    )
 
 
 def lsh_candidate_pairs(
@@ -434,16 +427,21 @@ def dedup_near(
 # exact Jaccard with a document-frequency cap
 # ---------------------------------------------------------------------------
 
-def _jaccard_items(
-    df: DataFrame, id_col: str, tokens_col: str, shingle_n: int
+def distinct_gram_rows(
+    df: DataFrame, id_col: str, tokens_col: str, n: int
 ) -> DataFrame:
-    """(id, item) inverted-index rows: distinct tokens (shingle_n=1) or
-    distinct n-token shingles per document."""
-    if shingle_n > 1:
-        base = with_shingles(df, tokens_col=tokens_col, n=shingle_n, out_col="__sh__")
-        return base.select(F.col(id_col), F.explode(F.array_distinct("__sh__")).alias("item"))
-    return df.select(
-        F.col(id_col), F.explode(F.array_distinct(F.col(tokens_col))).alias("item")
+    """(id, item) inverted-index rows: each document's distinct tokens
+    (n=1) or distinct n-token grams (documents shorter than n emit
+    none). Gram distinctness is decided on the ngrams_col structs,
+    which equals distinct gram strings for tokens without whitespace
+    or NULLs (word_tokens_col/tokens_col tokens)."""
+    if n == 1:
+        return df.select(
+            F.col(id_col), F.explode(F.array_distinct(F.col(tokens_col))).alias("item")
+        )
+    grams = F.explode(F.array_distinct(ngrams_col(F.col(tokens_col), n))).alias("__g__")
+    return df.select(F.col(id_col), grams).select(
+        F.col(id_col), ngram_text(F.col("__g__"), n).alias("item")
     )
 
 
@@ -466,7 +464,7 @@ def jaccard_hot_items(
     LAZY: no job runs until the caller acts on it. The on-demand audit
     path, so the operator itself never pays a hidden count() (VERDICT
     r2 #4)."""
-    return _jaccard_hot(_jaccard_items(df, id_col, tokens_col, shingle_n), max_item_df)
+    return _jaccard_hot(distinct_gram_rows(df, id_col, tokens_col, shingle_n), max_item_df)
 
 
 def jaccard_pairs(
@@ -507,7 +505,7 @@ def jaccard_pairs(
     audit without rebuilding the plan, call `jaccard_hot_items` with
     the same arguments — it returns the lazy hot-item frame.
     """
-    items = _jaccard_items(df, id_col, tokens_col, shingle_n)
+    items = distinct_gram_rows(df, id_col, tokens_col, shingle_n)
     if max_item_df is not None:
         hot = _jaccard_hot(items, max_item_df)
         if log_dropped:

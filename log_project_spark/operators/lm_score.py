@@ -31,10 +31,9 @@ Scale design (100 TB fit corpus):
   raw bigrams), never on the corpus.
 - vocab selection: orderBy().limit(V) => TakeOrderedAndProject (per-
   partition top-V + driver merge, no global sort shuffle).
-- bigram construction is pure codegen — arrays_zip over two slice()s,
+- bigram construction is parse.ngrams_col(tokens, 2): pure codegen,
   no higher-order-function lambda (those are interpreted per element;
-  CLAUDE.md) — and TOTAL (CASE-guarded) for the same pushed-predicate
-  reason as dedup.with_shingles.
+  CLAUDE.md), and TOTAL (CASE-guarded) on sub-2-token docs.
 - scoring: vocab/context joins are always broadcast (<= V+1 rows);
   the bigram-count join broadcasts by default (`broadcast_model=True`,
   fine up to ~10M distinct bigrams) or shuffles keyed on the word pair
@@ -55,7 +54,7 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from log_project_spark.operators.parse import word_tokens_col
+from log_project_spark.operators.parse import ngrams_col, word_tokens_col
 
 UNK = "<unk>"
 
@@ -74,19 +73,12 @@ class BigramLM(NamedTuple):
 
 def bigram_pairs(df: DataFrame, text_col: str, id_col: str | None) -> DataFrame:
     """(id?, w1, w2) consecutive-token pairs, multiplicity preserved;
-    docs with < 2 tokens contribute no rows. Pure codegen (zip of two
-    slices), CASE-guarded total expression."""
-    toks = word_tokens_col(F.col(text_col))
-    base = df.select(*([id_col] if id_col else []), toks.alias("__toks__"))
-    pairs = F.expr(
-        "CASE WHEN size(__toks__) >= 2 THEN arrays_zip("
-        "slice(__toks__, 1, size(__toks__) - 1), "
-        "slice(__toks__, 2, size(__toks__) - 1)) "
-        "ELSE array() END"
-    )
-    out = base.select(*([id_col] if id_col else []), F.explode(pairs).alias("__p__"))
+    docs with < 2 tokens contribute no rows (parse.ngrams_col)."""
+    ids = [id_col] if id_col else []
+    base = df.select(*ids, word_tokens_col(F.col(text_col)).alias("__toks__"))
+    out = base.select(*ids, F.explode(ngrams_col(F.col("__toks__"), 2)).alias("__p__"))
     return out.select(
-        *([id_col] if id_col else []),
+        *ids,
         F.col("__p__").getField("0").alias("w1"),
         F.col("__p__").getField("1").alias("w2"),
     )

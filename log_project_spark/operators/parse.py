@@ -144,6 +144,33 @@ def word_tokens_col(text: Column) -> Column:
     return F.when(norm == "", F.array().cast("array<string>")).otherwise(F.split(norm, " "))
 
 
+def ngrams_col(tokens: Column, n: int) -> Column:
+    """The n-grams of a token array, in order and with multiplicity, as
+    array<struct<0, ..., n-1>>: the zip of n slices of length
+    size-n+1, slice j contributing token i+j-1 to gram i. Pure codegen,
+    no higher-order lambda (Catalyst interprets those per element).
+
+    TOTAL: rows with fewer than n tokens (or NULL tokens) get the empty
+    array inside the expression itself, not via a row filter. A
+    downstream explode() infers a `size(...) > 0` predicate that Spark
+    may evaluate before any separate `size >= n` guard, and a negative
+    slice length throws at runtime (found on an empty document).
+
+    For per-document distinct grams use array_distinct on this array:
+    it equals distinct on the joined gram strings only when tokens hold
+    no whitespace and no NULLs, as word_tokens_col/tokens_col tokens
+    never do."""
+    size = F.size(tokens)
+    return F.when(
+        size >= n, F.arrays_zip(*[F.slice(tokens, j + 1, size - (n - 1)) for j in range(n)])
+    ).otherwise(F.array())
+
+
+def ngram_text(gram: Column, n: int) -> Column:
+    """One exploded ngrams_col element as its space-joined string."""
+    return F.concat_ws(" ", *[gram.getField(str(j)) for j in range(n)])
+
+
 # ---------------------------------------------------------------------------
 # Arrow/pandas-UDF variant (same output, Python vectorized path)
 # ---------------------------------------------------------------------------

@@ -80,16 +80,18 @@ AUDITS = [
     (
         "decontam_hits",
         "gram membership via broadcast LEFT SEMI join (train side never "
-        "shuffles for it); no text column on any exchange key",
+        "shuffles for it); no text column on any exchange key; grams built "
+        "by parse.ngrams_col, no interpreted lambdafunction",
         ["BroadcastHashJoin", "LeftSemi"],
-        ["SortMergeJoin", "hashpartitioning(text"],
+        ["SortMergeJoin", "hashpartitioning(text", "lambdafunction"],
     ),
     (
         "repetition_stats",
         "gram multiplicities keyed on (doc_id, xxhash64(gram)) — 16-byte "
-        "composite, never gram text; map-side partial aggregation present",
+        "composite, never gram text; map-side partial aggregation present; "
+        "grams built by parse.ngrams_col, no interpreted lambdafunction",
         ["partial_count", "xxhash64"],
-        ["hashpartitioning(text"],
+        ["hashpartitioning(text", "lambdafunction"],
     ),
     (
         "dedup_keep_min",

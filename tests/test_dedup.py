@@ -84,8 +84,7 @@ def test_lsh_hash_buckets_parity(spark, docs_df):
     """The xxhash64 band-bucket join (default) yields the same
     candidate pairs as the concatenated md5-hex string join, and the
     hashed plan joins on longs."""
-    sh = dedup.with_shingles(docs_df, tokens_col="tokens", n=3)
-    sig = dedup.minhash_signature(sh, num_hashes=4)
+    sig = dedup.minhash_signature(docs_df, num_hashes=4)
     pairs = lambda hb: {
         (r["id_a"], r["id_b"])
         for r in dedup.lsh_candidate_pairs(
@@ -125,16 +124,14 @@ def test_jaccard_pairs_match_bruteforce(spark, docs_df):
 
 
 def test_minhash_identical_docs_same_signature(spark, docs_df):
-    sh = dedup.with_shingles(docs_df, n=3)
-    sig = dedup.minhash_signature(sh, num_hashes=4)
+    sig = dedup.minhash_signature(docs_df, num_hashes=4)
     rows = {r["doc_id"]: (r["m0"], r["m1"], r["m2"], r["m3"]) for r in sig.collect()}
     assert rows[0] == rows[3]  # exact dups -> identical signatures
     assert rows[0] != rows[2]
 
 
 def test_lsh_candidates_include_exact_dups(spark, docs_df):
-    sh = dedup.with_shingles(docs_df, n=3)
-    sig = dedup.minhash_signature(sh, num_hashes=4)
+    sig = dedup.minhash_signature(docs_df, num_hashes=4)
     pairs = {
         (r["id_a"], r["id_b"])
         for r in dedup.lsh_candidate_pairs(sig, num_hashes=4, band_size=2).collect()
@@ -235,11 +232,6 @@ def test_jaccard_df_cap_drops_hot_items(spark):
     # without the cap every pair shares 'hot' (1/5 < 0.3 -> none pass,
     # but the candidate space is all 66 pairs); with it only tail-mates
     assert len(want) == 3 * len(list(itertools.combinations(range(4), 2)))
-
-
-def test_shingles_content(spark, docs_df):
-    sh = dedup.with_shingles(docs_df.where(F.col("doc_id") == 5), n=2).first()
-    assert list(sh["shingles"]) == ["unrelated short", "short text"]
 
 
 def test_embedding_near_dups(spark):
@@ -423,21 +415,3 @@ def test_jaccard_hot_items_lazy_audit(spark, docs_df):
     df_counts = Counter(tok for s in _token_sets().values() for tok in s)
     want = {item: n for item, n in df_counts.items() if n > 2}
     assert got == want
-
-
-def test_with_shingles_total_under_predicate_pushdown(spark):
-    """Regression (r5): explode() pushes `size(shingles) > 0` into the
-    same Filter as the size >= n guard; with an unguarded transform the
-    sequence(1, size-n+1) goes DESCENDING through 0 on sub-n-token rows
-    and slice(toks, 0, n) throws at runtime. The CASE-guarded
-    expression must survive empty and short docs."""
-    from pyspark.sql import functions as F
-
-    df = spark.createDataFrame(
-        [(0, ["a"]), (1, []), (2, ["a", "b", "c", "d"])],
-        "doc_id long, tokens array<string>",
-    )
-    sh = dedup.with_shingles(df, n=3)
-    grams = sh.select("doc_id", F.explode("shingles").alias("g"))
-    got = sorted(map(tuple, grams.collect()))
-    assert got == [(2, "a b c"), (2, "b c d")]

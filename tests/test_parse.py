@@ -142,3 +142,36 @@ def test_min_words_predicate_equivalence(spark):
         r["id"] for r in toked.where(F.size("toks") >= 3).select("id").collect()
     )
     assert cheap == strict
+
+
+def _py_ngrams(toks, n):
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
+@pytest.mark.parametrize("distinct", [False, True])
+@pytest.mark.parametrize("n", [1, 2, 3, 5, 13])
+def test_ngrams_col_matches_python_reference(spark, n, distinct):
+    """ngrams_col + ngram_text (optionally through array_distinct, which
+    keeps first occurrences in order) equal a pure-Python n-gram list on
+    token lists of every length 0..n+2 (with repeats), a NULL array, and
+    the short/empty docs whose explode-pushed `size > 0` predicate once
+    crashed an unguarded slice (r5)."""
+    lists = [[f"t{i % 3}" for i in range(k)] for k in range(n + 3)]
+    lists += [["unrelated", "short", "text"], ["a"], [], ["a", "b", "c", "d"], None]
+    df = spark.createDataFrame(list(enumerate(lists)), "id long, toks array<string>")
+    grams = parse.ngrams_col(F.col("toks"), n)
+    if distinct:
+        grams = F.array_distinct(grams)
+    rows = (
+        df.select("id", F.posexplode(grams).alias("pos", "g"))
+        .select("id", "pos", parse.ngram_text(F.col("g"), n).alias("gram"))
+        .collect()
+    )
+    got = {i: [] for i in range(len(lists))}
+    for r in sorted(rows, key=lambda r: (r["id"], r["pos"])):
+        got[r["id"]].append(r["gram"])
+    want = {}
+    for i, toks in enumerate(lists):
+        g = _py_ngrams(toks or [], n)
+        want[i] = list(dict.fromkeys(g)) if distinct else g
+    assert got == want

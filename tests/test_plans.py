@@ -117,3 +117,30 @@ def test_scored_route_counts_reuse_one_scan(spark):
     counts = route_ops.sink_counts(calibrate(t, PipelineConfig(drift_detector="none")))
     plan = _plan(counts)
     assert plan.count("Scan ExistingRDD") <= 1  # single source traversal
+
+
+def _ngram_builders():
+    from log_project_spark.operators import decontam, dedup, dsir, lm_score
+    from log_project_spark.operators import text_analysis as ta
+
+    return {
+        "contamination_hits": lambda d: decontam.contamination_hits(d, d, n=3),
+        "jaccard_pairs_shingles": lambda d: dedup.jaccard_pairs(d, shingle_n=3),
+        "minhash_signature": lambda d: dedup.minhash_signature(d, num_hashes=4),
+        "repetition_stats": lambda d: ta.repetition_stats(d),
+        "hashed_ngram_features": lambda d: dsir.hashed_ngram_features(d, ns=(1, 2, 3)),
+        "bigram_pairs": lambda d: lm_score.bigram_pairs(d, "text", "doc_id"),
+    }
+
+
+@pytest.mark.parametrize("builder", sorted(_ngram_builders()))
+def test_ngram_operators_have_no_lambda(spark, builder):
+    """Every n-gram operator builds and hashes its grams with
+    parse.ngrams_col and plain expressions: no interpreted HOF lambda
+    in the executed plan (CLAUDE.md hard rule)."""
+    docs = spark.createDataFrame(
+        [(0, "a b c d e"), (1, "a b c x"), (2, "b")], "doc_id long, text string"
+    ).withColumn("tokens", parse_ops.word_tokens_col(F.col("text")))
+    out = _ngram_builders()[builder](docs)
+    out.collect()
+    assert "lambdafunction" not in _plan(out).lower()

@@ -139,3 +139,27 @@ def test_ivf_topk_matches_bruteforce_within_cells(spark):
     in_cell = {r["vec_id"] for r in assigned.where(f"ivf_cell = {best_cell}").collect()}
     got = [r["vec_id"] for r in one.collect()]
     assert set(got) <= in_cell  # scan touched only the probed cell
+
+
+def test_ann_cosine_topk_query_survives_zero_vector(spark, tmp_path):
+    """The ann_cosine_topk gate query scores through cosine_to_query's
+    zero-norm guard: with ANSI on, an all-zero embedding row must rank
+    last with a NULL cosine instead of raising DIVIDE_BY_ZERO."""
+    import __spark_entry__ as e
+
+    rng = np.random.default_rng(3)
+    rows = [(i, [float(x) for x in rng.standard_normal(8)]) for i in range(12)]
+    rows[5] = (5, [0.0] * 8)
+    spark.createDataFrame(rows, "vec_id long, embedding array<float>").write.parquet(
+        str(tmp_path / "embeddings.parquet")
+    )
+    got = [(r["vec_id"], r["cos"]) for r in e.q_ann_cosine_topk(spark, str(tmp_path)).collect()]
+    q = np.array(rows[0][1], dtype=np.float32).astype(np.float64)
+    cos = {
+        i: float(np.dot(v, q) / (np.linalg.norm(v) * np.linalg.norm(q)))
+        for i, v in ((i, np.array(v, dtype=np.float32).astype(np.float64)) for i, v in rows[1:])
+        if i != 5
+    }
+    want = sorted(cos, key=lambda i: (-cos[i], i))[:10]
+    assert [i for i, _ in got] == want
+    assert [c for _, c in got] == pytest.approx([round(cos[i], 6) for i in want], abs=1e-6)
